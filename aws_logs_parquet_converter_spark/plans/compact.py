@@ -234,21 +234,19 @@ def audit_file_sizes(spark, dest: str):
     """Per-output-file bytes and row counts for a compacted destination —
     the ops check that file-count/size policy actually landed (target
     128–512 MB files at production scale; `num_output_files` /
-    `max_records_per_file` are the knobs). Uses `input_file_name()` over
-    one metadata-cheap scan; returns (file, n_rows, bytes) ordered by
-    bytes descending, with bytes from the filesystem listing, not a data
-    read."""
-    import os
-
+    `max_records_per_file` are the knobs). One aggregation over the
+    scan's `_metadata` column gives each file's path, size and rows, so
+    it works on any filesystem (`s3a://` included) with one collect and
+    no per-file filesystem call; returns (file, n_rows, bytes) ordered by
+    bytes descending."""
     from pyspark.sql import functions as F
 
     rows = (
         spark.read.parquet(dest)
-        .groupBy(F.input_file_name().alias("file"))
+        .groupBy(
+            F.col("_metadata.file_path").alias("file"),
+            F.col("_metadata.file_size").alias("bytes"),
+        )
         .agg(F.count("*").alias("n_rows"))
     ).collect()
-    out = []
-    for r in rows:
-        path = r.file.replace("file:", "")
-        out.append((r.file, r.n_rows, os.path.getsize(path)))
-    return sorted(out, key=lambda t: -t[2])
+    return sorted(((r.file, r.n_rows, r.bytes) for r in rows), key=lambda t: -t[2])

@@ -5,10 +5,11 @@ default run = yesterday (lookback_days), ``--start-date`` switches to a
 backfill loop of one compaction per day, each (bucket, date) written with
 overwrite semantics so reruns are idempotent.
 
-Spark-native difference: per-date input discovery is a path template handed to
-``spark.read.text`` (distributed listing, small-file packing) instead of a
-driver-side ListObjects loop; discovery of the per-bucket "folders" becomes a
-filesystem glob.
+Per-date input discovery is the reference's: one driver-side listing of the
+day prefix (``s3_server_access_logs.py:86-117``). The day directory is handed
+to ``spark.read.text``, whose file index lists it once, recursively, and packs
+the small files into splits; discovery of the per-bucket "folders" is one
+``listStatus`` of the source root.
 """
 
 from __future__ import annotations
@@ -96,7 +97,7 @@ def discover_folders(spark: SparkSession, source_root: str) -> list[str]:
 
 def input_path_for(cfg: RollupConfig, day: date, folder: str | None = None) -> str:
     root = f"{cfg.source_root}/{folder}" if folder else cfg.source_root
-    return f"{root}/{day.strftime(cfg.date_path_format)}/*"
+    return f"{root}/{day.strftime(cfg.date_path_format)}"
 
 
 def destination_for(cfg: RollupConfig, day: date, folder: str | None = None) -> str:
@@ -115,7 +116,9 @@ def compact_day(
     """Parse + compact one day of raw logs (optionally scoped to one logged
     bucket ``folder``); returns elapsed seconds, or None when the date has
     no input (skipped, like the reference's len(paths)>0 guard at
-    s3_server_access_logs.py:394)."""
+    s3_server_access_logs.py:394). A day folder that is missing, empty or
+    holds only ``_``/``.`` files has no input; its destination is left
+    alone."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
     t0 = time.time()
@@ -129,6 +132,11 @@ def compact_day(
         parsed = read_logs(
             spark, input_path_for(cfg, day, folder), fmt=cfg.log_format
         )
+        # len() of the Java array: the file index is already built, and a
+        # Python-side list would cost one py4j round trip per file
+        if len(parsed._jdf.inputFiles()) == 0:
+            log.info("no input files for %s folder=%s; skipping", day, folder)
+            return None
         dq = write_compacted(
             parsed,
             destination_for(cfg, day, folder),

@@ -7,8 +7,10 @@ PythonRDD that Catalyst can't see through. Spark-native replacement:
 planning, small-file packing (``spark.sql.files.openCostInBytes``), locality
 and column pruning; the parse stays in whole-stage codegen.
 
-At 100 TB the win is structural: no driver-side ListObjects loop (the file
-index is distributed), no per-file boto3 client, no JVM<->Python row hops.
+Input discovery stays what the reference does: a daily run hands over one
+day directory, which the driver lists once, recursively, as the reference
+lists the day prefix with one paged, delimiter-free LIST. What goes is the
+per-file boto3 client and the JVM<->Python row hop.
 """
 
 from __future__ import annotations
@@ -21,10 +23,18 @@ from ..functions.s3_log_parse import parse_s3_access_log_lines
 
 
 def read_text_lines(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame:
-    """Raw lines (one ``value`` column). Accepts a path, glob, or list."""
+    """Raw lines (one ``value`` column). Accepts a path, glob, or list.
+
+    A directory is read with every file below it, subfolders included, and
+    infers no partition columns from ``key=value`` folder names. Globs and
+    file paths read what they name. Prefer a directory to a ``dir/*`` glob:
+    each glob match is its own root, and past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` roots Spark
+    lists them again in a job, while a directory is listed once, on the
+    driver."""
     if isinstance(paths, str):
         paths = [paths]
-    return spark.read.text(list(paths))
+    return spark.read.option("recursiveFileLookup", "true").text(list(paths))
 
 
 def read_s3_access_logs(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame:

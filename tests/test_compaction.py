@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from aws_logs_parquet_converter_spark.cli import config_from_args, parse_arguments
 from aws_logs_parquet_converter_spark.functions.s3_log_parse import (
+    S3_ACCESS_LOG_SCHEMA,
     parse_s3_access_log_lines,
 )
 from aws_logs_parquet_converter_spark.plans.compact import (
@@ -153,6 +154,62 @@ def test_incremental_driver_alb_format(spark, tmp_path):
     assert "elb_status_code" in back.columns
 
 
+def test_compact_day_reads_every_file_under_the_day(spark, tmp_path):
+    """The day prefix is read recursively, like the reference's
+    delimiter-free listing: files in a plain subfolder and in a
+    ``key=value``-looking subfolder are compacted with the top-level ones,
+    and the folder name does not become a partition column."""
+    from aws_logs_parquet_converter_spark.plans.incremental import compact_day
+    from aws_logs_parquet_converter_spark.sources.generator import generate_log_lines
+
+    day = tmp_path / "raw" / "2024" / "07" / "02"
+    files = [day / "a.txt", day / "b.txt", day / "retry" / "c.txt", day / "hour=03" / "d.txt"]
+    for i, f in enumerate(files):
+        os.makedirs(f.parent, exist_ok=True)
+        f.write_text("\n".join(generate_log_lines(150, seed=20 + i)) + "\n")
+
+    cfg = RollupConfig(
+        source_root=str(tmp_path / "raw"),
+        destination_root=str(tmp_path / "out"),
+        policy=CompactionPolicy(num_output_files=2),
+    )
+    assert compact_day(spark, cfg, date(2024, 7, 2)) is not None
+    back = spark.read.parquet(str(tmp_path / "out" / "2024" / "07" / "02"))
+    expected = read_s3_access_logs(spark, [str(f) for f in files])
+    assert back.count() == expected.count() > 0
+    assert back.where("error_line IS NOT NULL").count() == (
+        expected.where("error_line IS NOT NULL").count()
+    )
+    assert back.columns == S3_ACCESS_LOG_SCHEMA.fieldNames()
+
+
+def test_day_read_launches_no_listing_job(spark, tmp_path):
+    """A day of more files than the parallel-discovery threshold (32) is
+    listed once, on the driver: building the reader launches no Spark job.
+    A ``day/*`` glob would make each file a root path and list them again
+    in a 40-task job."""
+    from aws_logs_parquet_converter_spark.plans.incremental import input_path_for
+    from aws_logs_parquet_converter_spark.sources.generator import generate_log_lines
+    from aws_logs_parquet_converter_spark.sources.registry import read_logs
+
+    day = date(2024, 7, 2)
+    cfg = RollupConfig(source_root=str(tmp_path / "raw"), destination_root=str(tmp_path / "out"))
+    d = tmp_path / "raw" / "2024" / "07" / "02"
+    os.makedirs(d)
+    for i in range(40):
+        (d / f"f{i:02d}.txt").write_text("\n".join(generate_log_lines(3, seed=i)) + "\n")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("day-read-listing", "read_logs over one day prefix")
+    try:
+        df = read_logs(spark, input_path_for(cfg, day))
+        assert list(sc.statusTracker().getJobIdsForGroup("day-read-listing")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(df.inputFiles()) == 40
+
+
 def test_default_compaction_is_single_pass_roundrobin(spark, tmp_path):
     from aws_logs_parquet_converter_spark.plans.compact import (
         CompactionPolicy,
@@ -230,6 +287,9 @@ def test_audit_file_sizes_reports_every_file(spark, tmp_path):
     assert 1 <= len(audit) <= 3
     assert sum(n for _, n, _ in audit) == parsed.count()
     assert all(b > 0 for _, _, b in audit)
+    # bytes are each file's size on disk, taken from the scan's metadata
+    on_disk = {os.path.basename(p): os.path.getsize(p) for p in glob.glob(out + "/*.parquet")}
+    assert {f.rsplit("/", 1)[1]: b for f, _, b in audit} == on_disk
 
 
 def test_corrupt_file_tolerance(spark, tmp_path):

@@ -6,7 +6,10 @@ from datetime import date
 from unittest.mock import patch
 
 from aws_logs_parquet_converter_spark.plans.compact import CompactionPolicy
-from aws_logs_parquet_converter_spark.plans.incremental import RollupConfig
+from aws_logs_parquet_converter_spark.plans.incremental import (
+    RollupConfig,
+    compact_day,
+)
 from aws_logs_parquet_converter_spark.plans.orchestrate import run_with_retries
 from aws_logs_parquet_converter_spark.sources.generator import generate_log_lines
 
@@ -70,6 +73,41 @@ def test_backfill_retries_and_reports(spark, tmp_path):
     assert report.to_dict()["n_failed"] == 0
     # the flaky day's output actually landed
     assert spark.read.parquet(os.path.join(out, "2024/07/01")).count() > 0
+
+
+def test_day_with_nothing_to_read_is_skipped(spark, tmp_path):
+    """A day folder that is empty, or holds only a job marker and a hidden
+    checksum file, has no input: it is skipped, and its destination is
+    neither created nor overwritten."""
+    raw, out = tmp_path / "raw", tmp_path / "out"
+    os.makedirs(raw / "2024/07/01")  # empty
+    marked = raw / "2024/07/02"
+    os.makedirs(marked)
+    (marked / "_SUCCESS").write_text("")
+    # log lines a reader would parse, were hidden files not filtered out
+    (marked / ".a.txt.crc").write_text("\n".join(generate_log_lines(20, seed=3)) + "\n")
+    # day 2 has earlier output that must survive the skipped run
+    kept = out / "2024/07/02"
+    spark.range(7).write.parquet(str(kept))
+    before = sorted(os.listdir(kept))
+
+    cfg = RollupConfig(
+        source_root=str(raw),
+        destination_root=str(out),
+        start_date="2024-07-01",
+        policy=CompactionPolicy(num_output_files=1),
+    )
+    assert compact_day(spark, cfg, date(2024, 7, 1)) is None
+    assert compact_day(spark, cfg, date(2024, 7, 2)) is None
+    report = run_with_retries(spark, cfg, today=date(2024, 7, 3), _sleep=lambda s: None)
+
+    assert [(d.day, d.status) for d in report.days] == [
+        ("2024-07-01", "skipped"),
+        ("2024-07-02", "skipped"),
+    ]
+    assert not (out / "2024/07/01").exists()
+    assert sorted(os.listdir(kept)) == before
+    assert spark.read.parquet(str(kept)).count() == 7
 
 
 def test_terminal_failure_fires_alarm_and_continues(spark, tmp_path):
