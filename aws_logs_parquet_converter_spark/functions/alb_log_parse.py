@@ -2,9 +2,13 @@
 
 The reference repo names ALB logs as a goal it never shipped
 (`/root/reference/README.md:11`); this module completes it with the same
-engine design as :mod:`.s3_log_parse`: two regex executions per line
-(match + group rewrite), one split, sentinel `-` -> NULL, typed casts,
-dead-letter rows.
+engine design as :mod:`.s3_log_parse`: one regex execution per line (a
+``regexp_replace`` that rewrites the leftmost match into its groups, see
+:func:`.log_lines.regex_tokens`), one split, sentinel `-` -> NULL, typed
+casts, dead-letter rows, and no per-field CASE WHEN.
+
+Size rule: the generated row loop must stay under 8,000 bytes of bytecode,
+HotSpot's limit for JIT-compiling a method (see :mod:`.log_lines`).
 
 Format (public AWS docs, 29 stable leading fields; trailing additions like
 conn_trace_id are tolerated because the pattern is not end-anchored):
@@ -24,10 +28,11 @@ here there is no reference behavior to preserve, so we store clean values).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .chain_cache import session_chain_cache
+from .log_lines import field, line_parser, regex_tokens
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -76,9 +81,6 @@ _FIELDS: list[tuple[str, bool, str | None]] = [
 
 ALB_LOG_PATTERN = " ".join(_Q if quoted else _U for _, quoted, _c in _FIELDS)
 
-_SEP = "\x01"
-_REPLACEMENT = _SEP.join(f"${i}" for i in range(1, len(_FIELDS) + 1))
-
 
 def _spark_type(cast: str | None):
     return {
@@ -104,39 +106,13 @@ def parse_alb_log_lines(value_col: str = "value"):
 
     Column tree built once per session (chain_cache); public shape stays
     ``parse_alb_log_lines(lines, value_col="value")``."""
-    line = F.regexp_replace(F.col(value_col), r"(?U)^\s+|\s+$", "")
-    line_nonempty = F.length(line) > 0
-    line_aliased = line.alias("_line")
-    matched = F.regexp_extract(F.col("_line"), ALB_LOG_PATTERN, 0)
-    tok = F.when(
-        F.col("_matched") != "",
-        F.split(
-            # _matched is exactly the matched prefix, so full anchoring is
-            # correct here (trailing additions never reach this rewrite)
-            F.regexp_replace(
-                F.col("_matched"), "^" + ALB_LOG_PATTERN + "$", _REPLACEMENT
-            ),
-            _SEP,
-        ),
-    )
-    ok = F.col("_tok").isNotNull()
-
     cols: list[Column] = []
-    for i, (name, quoted, cast) in enumerate(_FIELDS):
-        c: Column = F.element_at(F.col("_tok"), i + 1)
+    for i, (name, quoted, cast) in enumerate(_FIELDS, start=1):
+        c = field(i)
         if quoted:
             c = F.btrim(c, F.lit('"'))
         c = F.nullif(c, F.lit("-"))
-        if cast == "timestamp":
-            c = c.try_cast("timestamp")  # ISO8601 w/ Z -> UTC session time
-        elif cast is not None:
-            c = c.try_cast(cast)
-        cols.append(F.when(ok, c).alias(name))
-    cols.append(F.when(~ok, F.col("_line")).alias("error_line"))
-
-    def apply(lines: DataFrame) -> DataFrame:
-        df = lines.where(line_nonempty).select(line_aliased)
-        df = df.withColumn("_matched", matched).withColumn("_tok", tok)
-        return df.select(*cols)
-
-    return apply
+        if cast is not None:
+            c = c.try_cast(cast)  # timestamp: ISO8601 w/ Z -> UTC session time
+        cols.append(c.alias(name))
+    return line_parser(value_col, regex_tokens(ALB_LOG_PATTERN, len(_FIELDS)), cols)

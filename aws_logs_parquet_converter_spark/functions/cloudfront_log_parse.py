@@ -21,10 +21,11 @@ is a presentation choice — ``url_decode`` is available downstream).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .chain_cache import session_chain_cache
+from .log_lines import field, line_parser, split_tokens
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -96,34 +97,26 @@ def parse_cloudfront_log_lines(value_col: str = "value"):
     One `split` on tab is the whole parse (the format never embeds tabs in
     fields — values are URL-encoded). Stays entirely inside whole-stage
     codegen: no Python workers, no shuffle. Wrong-arity lines dead-letter
-    with the raw text preserved; ``#``-comment and blank lines are dropped.
+    with the raw text preserved; ``#``-comment and blank lines are dropped
+    (both judged after trimming spaces only).
     Column tree built once per session (chain_cache); public shape stays
     ``parse_cloudfront_log_lines(lines, value_col="value")``.
     """
     line = F.col(value_col)
-    line_nonempty = F.length(F.trim(line)) > 0
-    not_comment = ~F.startswith(F.ltrim(line), F.lit("#"))
-    line_aliased = line.alias("_line")
-    tok = F.split(F.col("_line"), "\t")
-    ok = F.size("_tok") == _N_FIELDS
+    keep = (F.length(F.trim(line)) > 0) & ~F.startswith(F.ltrim(line), F.lit("#"))
 
     def _raw(i: int) -> Column:
-        return F.nullif(F.element_at(F.col("_tok"), i + 1), F.lit("-"))
+        return F.nullif(field(i), F.lit("-"))
 
     ts = F.try_to_timestamp(
-        F.concat_ws(" ", _raw(0), _raw(1)), F.lit("yyyy-MM-dd HH:mm:ss")
+        F.concat_ws(" ", _raw(1), _raw(2)), F.lit("yyyy-MM-dd HH:mm:ss")
     )
-    cols = [F.when(ok, ts).alias("request_ts")]
-    for i, (name, cast) in enumerate(_FIELDS):
-        c = _raw(i + 2)
+    cols = [ts.alias("request_ts")]
+    for i, (name, cast) in enumerate(_FIELDS, start=3):
+        c = _raw(i)
         if cast is not None:
             c = c.try_cast(cast)
-        cols.append(F.when(ok, c).alias(name))
-    cols.append(F.when(~ok, F.col("_line")).alias("error_line"))
-
-    def apply(lines: DataFrame) -> DataFrame:
-        df = lines.where(line_nonempty).where(not_comment).select(line_aliased)
-        df = df.withColumn("_tok", tok)
-        return df.select(*cols)
-
-    return apply
+        cols.append(c.alias(name))
+    return line_parser(
+        value_col, split_tokens("\t", _N_FIELDS), cols, keep=keep, strip=False
+    )

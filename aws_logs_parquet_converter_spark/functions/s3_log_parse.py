@@ -7,14 +7,24 @@ expressions so the whole parse runs inside Tungsten whole-stage codegen on the
 JVM — no Python workers, no RDDs.
 
 Design: instead of 26 separate ``regexp_extract`` calls (26 regex executions
-per line), we run the regex **twice** per line:
+per line), we run the regex **once** per line, in one ``regexp_replace``
+(:func:`.log_lines.regex_tokens`):
 
-1. ``regexp_extract(line, PATTERN, 0)`` pulls the matched substring
-   (search semantics, identical to the reference's ``re.search``); empty
-   string means no match -> dead-letter row.
-2. ``regexp_replace(matched, '^PATTERN$', '$1\\x01$2...$26')`` rewrites the
-   match into a ``\\x01``-joined field list, which one cheap ``split`` turns
-   into an array; each field is then ``element_at`` + sentinel/cast logic.
+* ``(?s)^.*?(?:PATTERN).*$`` tries start positions left to right, as
+  ``find()`` does, so it picks the same leftmost match and groups as the
+  reference's ``re.search``; the rewrite keeps only the 26 groups, each
+  followed by a terminator no field can contain, and one ``split`` turns
+  them into an array. A line with no match comes back unchanged, and a
+  rewritten line never equals its input: no match -> dead-letter row.
+* Group 3 of the rewrite captures only the timestamp body, so the time
+  needs no second regex.
+* Each field is then ``element_at`` + sentinel/cast logic, with no per-field
+  CASE WHEN: a NULL array already makes every field NULL.
+
+Size rule: the generated row loop must stay under 8,000 bytes of bytecode,
+HotSpot's limit for JIT-compiling a method (see :mod:`.log_lines`). Over it,
+every line runs in the bytecode interpreter. A CASE WHEN per field plus a
+second regex pass is enough to cross it.
 
 Reference semantics preserved exactly (SURVEY.md §2.3 correctness traps):
 
@@ -28,7 +38,9 @@ Reference semantics preserved exactly (SURVEY.md §2.3 correctness traps):
   precision, TIMESTAMP_MILLIS physical type on write.
 * Unparseable lines are dead-lettered (26 NULLs + raw text in
   ``error_line``), parsed lines carry ``error_line = NULL``.
-* Blank / whitespace-only lines produce no row.
+* Blank / whitespace-only lines produce no row. Lines are stripped of the
+  Unicode White_Space set Java's ``(?U)\\s`` matches; unlike Python's
+  ``str.strip`` that set leaves U+001C-U+001F in place.
 
 Divergence (strictly more robust, documented): a *matched* line whose
 timestamp or numeric field is garbage yields NULL in that field; the
@@ -38,10 +50,11 @@ reference's Python parser would raise and kill the job
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .chain_cache import session_chain_cache
+from .log_lines import field, line_parser, regex_tokens
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -66,8 +79,15 @@ S3_ACCESS_LOG_PATTERN = (
 )
 
 _N_GROUPS = 26
-_SEP = "\x01"
-_REPLACEMENT = _SEP.join(f"${i}" for i in range(1, _N_GROUPS + 1))
+
+# The same grammar with group 3 narrowed to the timestamp the reference
+# parses (:144-154): the bracket content up to the first space or ']'. It
+# matches the same text with the same groups, and the rewrite hands the
+# timestamp body over without a second regex. Possessive quantifiers keep an
+# unclosed '[' from backtracking quadratically.
+_REWRITE_PATTERN = S3_ACCESS_LOG_PATTERN.replace(
+    r"(\[[^\]]*\])", r"\[([^\s\]]*+)[^\]]*+\]", 1
+)
 
 # (name, 1-based regex group, sentinel literal or None, cast type or None)
 _FIELD_SPECS: list[tuple[str, int, str | None, str | None]] = [
@@ -136,18 +156,6 @@ S3_ACCESS_LOG_SCHEMA = StructType(
 OUTPUT_COLUMNS = [f.name for f in S3_ACCESS_LOG_SCHEMA.fields]
 
 
-def _parse_time(time_group: Column) -> Column:
-    """``[30/Jul/2024:13:08:44 +0000]`` -> naive timestamp (zone dropped).
-
-    Replicates the reference's slice-to-first-space + dateutil parse
-    (s3_server_access_logs.py:144-154): take the bracket content up to the
-    first space or closing bracket, parse as dd/MMM/yyyy:HH:mm:ss; anything
-    malformed -> NULL.
-    """
-    body = F.regexp_extract(time_group, r"\[([^\s\]]+)", 1)
-    return F.try_to_timestamp(body, F.lit("dd/MMM/yyyy:HH:mm:ss"))
-
-
 @session_chain_cache
 def parse_s3_access_log_lines(value_col: str = "value"):
     """Parse a DataFrame of raw log lines into the 27-column typed table.
@@ -159,49 +167,16 @@ def parse_s3_access_log_lines(value_col: str = "value"):
     tree is built once per session (chain_cache) so per-micro-batch
     streaming calls don't rebuild ~150 py4j expressions each trigger.
     """
-    # Python str.strip() semantics (reference :135): strip ALL whitespace
-    # (unicode-aware — (?U) makes Java's \s match e.g.   like Python's
-    # str.strip does), drop empty; F.trim only handles spaces.
-    line = F.regexp_replace(F.col(value_col), r"(?U)^\s+|\s+$", "")
-    line_nonempty = F.length(line) > 0
-    line_aliased = line.alias("_line")
-
-    # Regex exec #1: matched substring (search semantics; '' = no match).
-    matched = F.regexp_extract(F.col("_line"), S3_ACCESS_LOG_PATTERN, 0)
-    # Regex exec #2: rewrite the matched text into \x01-joined groups, split once.
-    tok = F.when(
-        F.col("_matched") != "",
-        F.split(
-            F.regexp_replace(
-                F.col("_matched"), "^" + S3_ACCESS_LOG_PATTERN + "$", _REPLACEMENT
-            ),
-            _SEP,
-        ),
-    )
-
-    ok = F.col("_tok").isNotNull()
-
-    def _tok(i: int) -> Column:
-        return F.element_at(F.col("_tok"), i)
-
     cols: list[Column] = []
-    for name in OUTPUT_COLUMNS:
+    for name in OUTPUT_COLUMNS[:-1]:
         if name == "request_time":
-            cols.append(F.when(ok, _parse_time(_tok(3))).alias(name))
-        elif name == "error_line":
-            cols.append(F.when(~ok, F.col("_line")).alias(name))
+            c = F.try_to_timestamp(field(3), F.lit("dd/MMM/yyyy:HH:mm:ss"))
         else:
-            fname, grp, sentinel, cast = next(s for s in _FIELD_SPECS if s[0] == name)
-            c = _tok(grp)
+            _name, grp, sentinel, cast = next(s for s in _FIELD_SPECS if s[0] == name)
+            c = field(grp)
             if sentinel is not None:
                 c = F.nullif(c, F.lit(sentinel))
             if cast is not None:
                 c = c.try_cast(cast)
-            cols.append(F.when(ok, c).alias(name))
-
-    def apply(lines: DataFrame) -> DataFrame:
-        df = lines.where(line_nonempty).select(line_aliased)
-        df = df.withColumn("_matched", matched).withColumn("_tok", tok)
-        return df.select(*cols)
-
-    return apply
+        cols.append(c.alias(name))
+    return line_parser(value_col, regex_tokens(_REWRITE_PATTERN, _N_GROUPS), cols)

@@ -16,10 +16,11 @@ Lines where the capture produced no data carry `-` in most fields and
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .chain_cache import session_chain_cache
+from .log_lines import field, line_parser, split_tokens
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -82,14 +83,9 @@ def parse_vpc_flow_lines(value_col: str = "value"):
     Column tree built once per session (chain_cache); public shape stays
     ``parse_vpc_flow_lines(lines, value_col="value")``.
     """
-    line = F.regexp_replace(F.col(value_col), r"(?U)^\s+|\s+$", "")
-    line_nonempty = F.length(line) > 0
-    line_aliased = line.alias("_line")
-    tok = F.split(F.col("_line"), " ")
-    ok = F.size("_tok") == _N_FIELDS
 
     def _field(i: int, cast: str | None) -> Column:
-        c: Column = F.nullif(F.element_at(F.col("_tok"), i + 1), F.lit("-"))
+        c = F.nullif(field(i), F.lit("-"))
         if cast == "epoch":
             return F.timestamp_seconds(c.try_cast("bigint"))
         if cast is not None:
@@ -97,14 +93,6 @@ def parse_vpc_flow_lines(value_col: str = "value"):
         return c
 
     cols = [
-        F.when(ok, _field(i, cast)).alias(name)
-        for i, (name, cast) in enumerate(_FIELDS)
+        _field(i, cast).alias(name) for i, (name, cast) in enumerate(_FIELDS, start=1)
     ]
-    cols.append(F.when(~ok, F.col("_line")).alias("error_line"))
-
-    def apply(lines: DataFrame) -> DataFrame:
-        df = lines.where(line_nonempty).select(line_aliased)
-        df = df.withColumn("_tok", tok)
-        return df.select(*cols)
-
-    return apply
+    return line_parser(value_col, split_tokens(" ", _N_FIELDS), cols)

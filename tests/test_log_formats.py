@@ -60,6 +60,23 @@ def test_alb_dead_letter_and_schema(spark):
     assert sorted(r.error_line is None for r in rows) == [False, True]
 
 
+def test_alb_old_separator_in_a_field_keeps_every_column(spark):
+    """A field holding \\x01 leaves every later column in place."""
+    line = GOLDEN_ALB_LINE.replace("app/my-lb/", "app/my\x01lb/").replace(
+        '"curl/7.46.0"', '"curl\x01/7.46.0"'
+    )
+    row = parse_alb_log_lines(_df(spark, [line])).collect()[0]
+    assert row.error_line is None
+    assert row.elb == "app/my\x01lb/50dc6c495c0c9188"
+    assert row.client == "192.168.131.39:2817"
+    assert row.elb_status_code == 200 and row.sent_bytes == 366
+    assert row.user_agent == "curl\x01/7.46.0"
+    assert row.ssl_protocol == "TLSv1.2"
+    assert row.request_creation_time == datetime(2024, 7, 2, 22, 22, 48, 364000)
+    assert row.target_status_code_list == "200"
+    assert row.classification_reason is None
+
+
 def test_vpc_flow_golden_line(spark):
     row = parse_vpc_flow_lines(_df(spark, [GOLDEN_VPC_FLOW_LINE])).collect()[0]
     assert row.error_line is None

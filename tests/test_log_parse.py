@@ -5,12 +5,17 @@ Golden line + expectations from the reference's own test suite
 golden line at ``:190``) and FIXTURES.md §1.
 """
 
+import re
 from datetime import datetime
 
 import pytest
+from pyspark.sql import functions as F
 
+from aws_logs_parquet_converter_spark.functions.log_lines import WHITE_SPACE
 from aws_logs_parquet_converter_spark.functions.s3_log_parse import (
+    _FIELD_SPECS,
     OUTPUT_COLUMNS,
+    S3_ACCESS_LOG_PATTERN,
     S3_ACCESS_LOG_SCHEMA,
     parse_s3_access_log_lines,
 )
@@ -154,3 +159,148 @@ def test_python_datasource_feeds_parser(spark):
     dead = parsed.where("error_line IS NOT NULL").count()
     assert 0 < dead < n  # generator plants garbage lines; the rest parse
     assert parsed.where("error_line IS NULL AND request_time IS NULL").count() == 0
+
+
+# ---------------------------------------------------------------------------
+# Row-for-row parity with a Python reference of the reference's parser
+# ---------------------------------------------------------------------------
+
+SHORT_LINE = (
+    "own bkt [30/Jul/2024:13:08:44 +0000] 1.2.3.4 req REQID REST.GET.OBJECT "
+    'key "GET /key HTTP/1.1" 200 - 10 20 3 2 "-" "UA" - hid SigV4 cipher '
+    "AuthHeader host TLSv1.3 - -"
+)
+OTHER_LINE = (
+    "own2 bkt2 [01/Jan/2023:00:00:01 +0000] 5.6.7.8 req2 REQ2 REST.PUT.OBJECT "
+    'k2 "PUT /k2 HTTP/1.1" 404 NoSuchKey 0 - 7 - "http://r" "UA2" X hid2 '
+    "SigV2 c2 QueryString host2 TLSv1.2 arn:ap Yes"
+)
+
+EDGE_LINES = [
+    GOLDEN_LINE,
+    SHORT_LINE,
+    # leading / trailing White_Space the strip removes
+    "\xa0" + GOLDEN_LINE + "\xa0",
+    "\u2028" + SHORT_LINE + "\u3000",
+    "\u3000\t\x85" + SHORT_LINE + "\u2028\xa0\r\n",
+    "\x1c" + SHORT_LINE,  # not White_Space: kept, becomes part of bucket_owner
+    # tabs inside a line: inside quoted fields they parse, between fields not
+    SHORT_LINE.replace("GET /key", "GET\t/key"),
+    SHORT_LINE.replace('"UA"', '"U\tA"'),
+    SHORT_LINE.replace(" 200 ", "\t200 "),
+    # line terminators inside a line
+    SHORT_LINE.replace('"UA"', '"U\u2028A\x85B\nC"'),
+    "pre\n" + SHORT_LINE,
+    # the match starts after leading garbage
+    "junk [x] " + SHORT_LINE,
+    "p q " + SHORT_LINE,
+    "own0 bkt0 [01/Jan/2020:00:00:00 +0000] " + SHORT_LINE,
+    # two candidate matches in one line: the leftmost wins
+    SHORT_LINE + " " + OTHER_LINE,
+    OTHER_LINE + " " + SHORT_LINE,
+    SHORT_LINE + " trailing fields",
+    # \x01 inside fields
+    SHORT_LINE.replace("own ", "own\x01er ", 1),
+    SHORT_LINE.replace(" key ", " k\x01e\x01y ").replace('"UA"', '"U\x01A"'),
+    # the rewrite's field terminator, and its pieces, inside fields
+    SHORT_LINE.replace(" key ", ' k]"x ').replace("GET /key", "GET /a]"),
+    SHORT_LINE.replace("+0000]", '"+0000 ]"]'),
+    SHORT_LINE.replace('"UA"', '"U]" A"'),
+    # timestamps and numbers the casts reject
+    SHORT_LINE.replace("[30/Jul/2024:13:08:44 +0000]", "[InvalidTimestamp]"),
+    SHORT_LINE.replace("[30/Jul/2024:13:08:44 +0000]", "[ 30/Jul/2024:13:08:44]"),
+    SHORT_LINE.replace("[30/Jul/2024:13:08:44 +0000]", "[30/Jul/2024:13:08:44]"),
+    SHORT_LINE.replace("[30/Jul/2024:13:08:44 +0000]", "[]"),
+    SHORT_LINE.replace(" 200 ", " 2xx ").replace(" 10 20 ", " 99999999999999999999 +20 "),
+    # unmatched lines are dead-lettered, stripped
+    SHORT_LINE.replace("+0000]", "+0000"),
+    SHORT_LINE.replace(' - -', ' -'),
+    " content\t",
+    # blank and White_Space-only lines are dropped
+    "",
+    " ",
+    "\t\u3000\u2028",
+    "\xa0",
+]
+
+_INT_RANGE = {"int": 2**31, "bigint": 2**63}
+
+
+def _reference_row(value):
+    """The reference's parse of one line, as a row tuple (None: dropped).
+
+    ``re.search`` on the stripped line, then the sentinels, the integer
+    casts (NULL when not a number in range) and the timestamp rule: the
+    bracket content up to its first space, as ``dd/MMM/yyyy:HH:mm:ss``.
+    ``re.ASCII`` gives ``\\s`` the ASCII set that Java's has.
+    """
+    line = value.strip(WHITE_SPACE)
+    if not line:
+        return None
+    m = re.search(S3_ACCESS_LOG_PATTERN, line, re.ASCII)
+    if m is None:
+        return (None,) * (len(OUTPUT_COLUMNS) - 1) + (line,)
+    groups = m.groups()
+    row = {"error_line": None}
+    for name, grp, sentinel, cast in _FIELD_SPECS:
+        v = groups[grp - 1]
+        if v == sentinel:
+            v = None
+        if cast is not None and v is not None:
+            ok = re.fullmatch(r"[+-]?[0-9]+", v) and abs(int(v)) < _INT_RANGE[cast]
+            v = int(v) if ok else None
+        row[name] = v
+    body = re.match(r"\[([^\s\]]+)", groups[2], re.ASCII)
+    try:
+        ts = datetime.strptime(body.group(1), "%d/%b/%Y:%H:%M:%S") if body else None
+    except ValueError:
+        ts = None
+    row["request_time"] = ts
+    return tuple(row[c] for c in OUTPUT_COLUMNS)
+
+
+def test_parse_matches_python_reference_row_for_row(spark):
+    expected = [r for r in map(_reference_row, EDGE_LINES) if r is not None]
+    got = [tuple(r) for r in _parse(spark, EDGE_LINES).collect()]
+    assert sorted(got, key=repr) == sorted(expected, key=repr)
+
+
+def test_old_separator_in_a_field_keeps_every_column(spark):
+    """A field holding \\x01 leaves every later column in place."""
+    row = _parse(spark, [SHORT_LINE.replace("own ", "own\x01er ", 1)]).collect()[0]
+    assert row.error_line is None
+    assert row.bucket_owner == "own\x01er"
+    assert row.s3_bucket == "bkt"
+    assert row.request_time == datetime(2024, 7, 30, 13, 8, 44)
+    assert row.http_status == 200
+    assert row.acl_required is None
+
+
+def test_white_space_trim_matches_the_regex_strip_on_every_code_point(spark):
+    """trim(WHITE_SPACE) == regexp_replace('(?U)^\\s+|\\s+$'), and
+    rlike('(?U)\\S') == non-empty after it, for every code point alone
+    and in leading, inner and trailing position."""
+    # code point -> 4 UTF-32 bytes, after a byte-order mark so that the
+    # decoder does not swallow U+FEFF as one
+    utf32 = F.concat(F.lit("0000FEFF"), F.lpad(F.hex("id"), 8, "0"))
+    cp = F.decode(F.unhex(utf32), "UTF-32")
+    chars = spark.range(0x110000).where(~F.col("id").between(0xD800, 0xDFFF))
+    s = F.col("s")
+    strip = F.regexp_replace(s, r"(?U)^\s+|\s+$", "")
+    trimmed = F.trim(s, F.lit(WHITE_SPACE))
+    counts = (
+        chars.select(cp.alias("c"))
+        .select(F.explode(F.array("c", F.concat("c", F.lit("a"), "c", F.lit("b"), "c"))))
+        .select(F.col("col").alias("s"))
+        .agg(
+            F.count("s").alias("strings"),
+            F.count_if(trimmed != strip).alias("trim_differs"),
+            F.count_if(s.rlike(r"(?U)\S") != (F.length(strip) > 0)).alias("blank_differs"),
+            F.count_if(trimmed == "").alias("all_white_space"),
+        )
+        .first()
+    )
+    assert counts.strings == 2 * (0x110000 - 0x800)
+    assert counts.trim_differs == 0
+    assert counts.blank_differs == 0
+    assert counts.all_white_space == len(WHITE_SPACE) == 25
